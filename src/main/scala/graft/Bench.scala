@@ -24,6 +24,12 @@ object Bench {
     if (l < 0) -1.0 else math.round(l * 100) / 100.0
   }
 
+  /** One `name: ExceptionClass: message` line on stderr for a failure
+    * the run survives (stdout's last line stays the JSON result). */
+  private def trace(name: String, t: Throwable): Unit =
+    System.err.println(s"$name: ${t.getClass.getName}: " +
+      Option(t.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse(""))
+
   def main(args: Array[String]): Unit = {
     // silence log4j2 BEFORE the session builds: SparkContext startup
     // logs at INFO ahead of any setLogLevel call, and those lines land
@@ -74,7 +80,7 @@ object Bench {
     // discarded warm-up: compiles codegen + JIT for every plan shape
     names.foreach { name =>
       try SparkEntry.queries(name)(spark, warmDir).count()
-      catch { case _: Throwable => () }
+      catch { case t: Throwable => trace(name, t) }
     }
     Hygiene.clearAll(spark)
     // Interleaved KNOWN-COST canary (VERDICT r8 task 3): `mins_ms` only
@@ -162,7 +168,8 @@ object Bench {
         // OUTSIDE the timed window; opt out with SPARK_GRAFT_BENCH_GC=0.
         if (!sys.env.get("SPARK_GRAFT_BENCH_GC").contains("0")) System.gc()
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case _: Throwable => return -1.0 }
+        try fn(spark, sfDir).count()
+        catch { case t: Throwable => trace(name, t); return -1.0 }
         (System.nanoTime() - t0) / 1e9
       }
       val runs = Seq(once(), once(), once())
@@ -286,7 +293,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter("BENCH_LOCAL.json")
       try w.println(fullLine) finally w.close()
-    } catch { case _: Throwable => () }
+    } catch { case t: Throwable => trace("BENCH_LOCAL.json", t) }
     // Compact keys: leading token (q23_sort_limit -> q23); names whose
     // leading token collides (x13_*, x37_*) keep their full name.
     val lead = results.groupBy(_._1.takeWhile(_ != '_'))

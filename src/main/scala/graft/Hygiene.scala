@@ -51,12 +51,6 @@ object Hygiene {
     try f finally sc.setJobDescription(old)
   }
 
-  /** Conf: "off" disables [[scopedShuffleParts]] (the stage runs at the
-    * session's partition count) — the same-session A/B seam, one flag
-    * for every caller (the CC loop keeps its own seam; see
-    * `ConnectedComponents.AdaptivePartsConf`). */
-  val ScopedPartsConf = "spark.graft.scopedParts"
-
   /** Execute `body` with `spark.sql.shuffle.partitions` scoped to
     * clamp(ceil(rows / 500), 1, session value) — for stages whose
     * reduce sides are PROVABLY bounded by `rows` (guide §2.2
@@ -73,9 +67,7 @@ object Hygiene {
     val conf = s.sessionState.conf.numShufflePartitions
     val derived = math.max(1L, math.min(conf.toLong,
       (math.max(rows, 0L) + 499L) / 500L)).toInt
-    val engage = derived < conf &&
-      !s.conf.getOption(ScopedPartsConf).contains("off")
-    if (!engage) body
+    if (derived >= conf) body
     else {
       s.conf.set("spark.sql.shuffle.partitions", derived)
       try body

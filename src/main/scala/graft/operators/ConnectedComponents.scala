@@ -147,14 +147,11 @@ object ConnectedComponents {
     // with few nodes but many edges stay safe: map sides run at the
     // PARENT partitioning and the per-round contract collapses
     // near-clique components geometrically (the r16 measurement: 4.5M
-    // symmetric edges → 2582 after round 1). Conf seam
-    // `spark.graft.cc.adaptiveParts=off` for same-session A/Bs.
+    // symmetric edges → 2582 after round 1).
     val confParts = s.sessionState.conf.numShufflePartitions
     val derivedParts = math.max(1L, math.min(confParts.toLong,
       (nNodes + LoopNodesPerPartition - 1) / LoopNodesPerPartition)).toInt
-    val adaptParts =
-      !s.conf.getOption(AdaptivePartsConf).contains("off") &&
-        derivedParts < confParts
+    val adaptParts = derivedParts < confParts
     if (adaptParts)
       s.conf.set("spark.sql.shuffle.partitions", derivedParts)
     // pre-partition on the join key only when the label side will
@@ -300,10 +297,6 @@ object ConnectedComponents {
     * few MB per task — large enough to amortize task launch, small
     * enough that a single partition never concentrates real work. */
   private val LoopNodesPerPartition = 500L
-
-  /** Conf: "off" keeps the loop's shuffles at the session's partition
-    * count (r17 session 2) — the same-session A/B seam. */
-  private[graft] val AdaptivePartsConf = "spark.graft.cc.adaptiveParts"
 
   /** Driver-side id ordering, shared by the tiny-graph fast path,
     * [[driverFinish]] and the leakage-safe split's driver path

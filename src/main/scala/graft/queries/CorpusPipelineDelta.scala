@@ -2,10 +2,13 @@ package graft.queries
 
 import graft.Tables
 import graft.multimodal.Multimodal
-import graft.operators.{Compaction, Dedup, HammingJoin, HammingStore, HammingStoreMeta, NearDupSignatureStore}
+import graft.operators.{Compaction, Dedup, HammingJoin, HammingStore, NearDupSignatureStore}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** The INCREMENTAL corpus pipeline (VERDICT r10 task 1) — the shape a
   * 100 TB training-data pipeline actually runs daily: yesterday's
@@ -119,13 +122,16 @@ import org.apache.spark.sql.functions._
 object CorpusPipelineDelta {
   import CorpusPipeline.Config
 
-  /** Shared daemon pool for a fold's overlappable side jobs (guide
-    * §2.6 — overlap independent jobs): the digest-ledger append, the
-    * media half, the store append and the meta staging have no
-    * downstream readers inside the fold, so they run here while the
-    * main thread walks the dependent chain. Cached (grows on demand,
-    * reclaims idle threads); daemon so a dying driver never hangs on
-    * it. Every launched job is AWAITED before the fold's commit point. */
+  /** Shared daemon pool for a fold's overlappable jobs (guide §2.6 —
+    * overlap independent jobs): the read-only head jobs, the journal
+    * write, and the side jobs with no downstream reader inside the fold
+    * (digest-ledger append, media half, store append, meta staging).
+    * Cached (grows on demand, reclaims idle threads); daemon so a dying
+    * driver never hangs on it. Jobs reach it only through a
+    * [[JoinGroup]]. The invariant: every pool job is joined before the
+    * commit marker, and before any rethrow — so the commit sees every
+    * append durable, recovery never races a still-writing job, and no
+    * job outlives the fold's lease. */
   private lazy val foldPool: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newCachedThreadPool(
       new java.util.concurrent.ThreadFactory {
@@ -136,8 +142,50 @@ object CorpusPipelineDelta {
           t
         }
       })
-  private lazy val foldEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(foldPool)
+  private lazy val foldEc: ExecutionContext =
+    ExecutionContext.fromExecutorService(foldPool)
+
+  private def await[T](f: Future[T]): T = Await.result(f, Duration.Inf)
+
+  /** The fold's one concurrency mechanism: labelled jobs forked onto
+    * [[foldPool]], plus outside futures it is told to track (the
+    * stores' append-done futures). [[joinAll]] awaits every tracked job
+    * and then throws the first failure (in tracking order), every other
+    * one attached with `addSuppressed`; [[joining]] runs a body and
+    * joins on both exits, attaching the join's failures to the body's. */
+  private[graft] final class JoinGroup(s: SparkSession) {
+    private val jobs = scala.collection.mutable.ArrayBuffer.empty[Future[Any]]
+
+    def fork[T](label: String)(body: => T): Future[T] =
+      track(Future(graft.Hygiene.labeled(s, label)(body))(foldEc))
+
+    def track[T](f: Future[T]): Future[T] = synchronized { jobs += f; f }
+
+    /** An executor view for the stores: each task is a fork. */
+    def executor(label: String): java.util.concurrent.Executor =
+      r => fork(label)(r.run())
+
+    def joinAll(): Unit = {
+      val all = synchronized { val l = jobs.toList; jobs.clear(); l }
+      val failures = all.flatMap(f =>
+        Await.ready(f, Duration.Inf).value.get.failed.toOption)
+      failures.headOption.foreach { first =>
+        failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      }
+    }
+
+    def joining[T](body: => T): T = {
+      val out = try body catch {
+        case t: Throwable =>
+          try joinAll()
+          catch { case j: Throwable => if (j ne t) t.addSuppressed(j) }
+          throw t
+      }
+      joinAll()
+      out
+    }
+  }
 
   private def storeDir(stateDir: String) = s"$stateDir/store"
   private def digestsDir(stateDir: String) = s"$stateDir/digests"
@@ -228,12 +276,9 @@ object CorpusPipelineDelta {
   /** The rendering's delimiter grammar: '|' separates segments, ','
     * separates keepLangs entries and quota pairs, ':' splits a quota
     * pair — a data value containing one would render ambiguously (two
-    * configs, one fingerprint) and mis-parse under canonicalizeFp.
-    * Reject loudly; real language codes and source names never carry
-    * these (r13 residual nit made enforced; quota keys added by the
-    * r14 review — they feed the same grammar). Runs BEFORE the
-    * callers' `.sorted` (a null entry would NPE inside the sort ahead
-    * of the intended error). */
+    * configs, one fingerprint). Reject loudly; real language codes and
+    * source names never carry these. Runs BEFORE the `.sorted` (a null
+    * entry would NPE inside the sort ahead of the intended error). */
   private def requireFingerprintable(cfg: Config): Unit = {
     cfg.keepLangs.find(l => l == null || l.contains(",") || l.contains("|"))
       .foreach(l => throw new IllegalArgumentException(
@@ -248,45 +293,19 @@ object CorpusPipelineDelta {
           "be delimiter-free for the persisted cfg_fp to be unambiguous"))
   }
 
-  private def renderFingerprint(cfg: Config, langs: Seq[String]): String = {
-    Seq(
-      s"id=${cfg.idCol}", s"text=${cfg.textCol}", s"lang=${cfg.langCol}",
-      s"source=${cfg.sourceCol}", s"minQuality=${cfg.minQuality}",
-      s"keepLangs=${langs.mkString(",")}",
-      s"threshold=${cfg.nearDupThreshold}",
-      s"quotas=${cfg.quotas.toSeq.sorted.map { case (k, v) => s"$k:$v" }
-        .mkString(",")}").mkString("|")
-  }
-
   // keepLangs sorted like quotas (ADVICE r12): membership is an isin
   // test, so the same language SET in a different Seq order is the
   // same config
   private[graft] def cfgFingerprint(cfg: Config): String = {
     requireFingerprintable(cfg)
-    renderFingerprint(cfg, cfg.keepLangs.sorted)
+    Seq(
+      s"id=${cfg.idCol}", s"text=${cfg.textCol}", s"lang=${cfg.langCol}",
+      s"source=${cfg.sourceCol}", s"minQuality=${cfg.minQuality}",
+      s"keepLangs=${cfg.keepLangs.sorted.mkString(",")}",
+      s"threshold=${cfg.nearDupThreshold}",
+      s"quotas=${cfg.quotas.toSeq.sorted.map { case (k, v) => s"$k:$v" }
+        .mkString(",")}").mkString("|")
   }
-
-  /** The pre-r13 rendering (keepLangs in Seq order) — what states
-    * persisted before the canonicalization carry; used by the
-    * migration spec to manufacture one. */
-  private[graft] def cfgFingerprintLegacy(cfg: Config): String = {
-    requireFingerprintable(cfg)
-    renderFingerprint(cfg, cfg.keepLangs)
-  }
-
-  /** Canonicalize a STORED fingerprint's keepLangs segment: pre-r13
-    * states rendered the build-time Seq order, and comparing raw
-    * strings would refuse every such state under the sorted rendering
-    * — including when the offered Seq order differs from the
-    * build-time one (same set, both legitimate). All other segments
-    * were always canonical. */
-  private def canonicalizeFp(fp: String): String =
-    fp.split("\\|", -1).map { seg =>
-      if (seg.startsWith("keepLangs="))
-        "keepLangs=" + seg.stripPrefix("keepLangs=")
-          .split(",", -1).filter(_.nonEmpty).sorted.mkString(",")
-      else seg
-    }.mkString("|")
 
   /** Apply one increment to the pipeline state at `stateDir` and return
     * the refreshed full output ([[foldIncrement]] + [[refreshOutput]]).
@@ -344,6 +363,13 @@ object CorpusPipelineDelta {
           "=> re-apply that increment; Completed => it was already " +
           "applied)")
 
+    // every pool job of this fold — head reads, journal, side jobs — is
+    // forked into `jobs`; joined before the commit marker below, and on
+    // any failure (a precondition refusal included) before the rethrow,
+    // so no job outlives the lease
+    val jobs = new JoinGroup(s)
+    jobs.joining {
+
     // 0a. config-stability precondition (r12 sweep): the state's
     // fingerprint must match this fold's — a mid-chain change to a
     // state-shaping field (quotas, gates, threshold, columns) cannot be
@@ -357,30 +383,20 @@ object CorpusPipelineDelta {
     // — run on the pool beside the main thread's delta id-bounds
     // aggregate. All are read-only; the fold lease (already held) is
     // the exclusion that makes the early store-meta read stable.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val metaF = Future(graft.Hygiene.labeled(s, "fold: meta read") {
-      readMetaState(s, stateDir) })(foldEc)
-    val mediaBoundsF = Future(
-      graft.Hygiene.labeled(s, "fold: media id bounds") {
-        media.map(_.toDF().agg(
-          min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-          .collect().head) })(foldEc)
+    val metaF = jobs.fork("fold: meta read") { readMetaState(s, stateDir) }
+    val mediaBoundsF = jobs.fork("fold: media id bounds") {
+      media.map(_.toDF().agg(
+        min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+        .collect().head) }
     val stPath = storeDir(stateDir)
-    val storeMetaF = Future(graft.Hygiene.labeled(s, "fold: store meta") {
-      NearDupSignatureStore.preloadMeta(s, stPath) })(foldEc)
+    val storeMetaF = jobs.fork("fold: store meta") {
+      NearDupSignatureStore.preloadMeta(s, stPath) }
     // the external benchmark's gram table is fixed per fold and
     // read-only — materialize it on the pool too, so the mix-stage
     // write (whose plan broadcasts it) reads checkpointed blocks
     // instead of deriving grams on the fold's critical path.
-    // Conf-gated off for same-session A/B measurement (the
-    // SkipEagerCutConf precedent; this box's session-level bimodality
-    // makes cross-session medians unusable for ~0.5 s claims).
-    val evalGramsF: Option[scala.concurrent.Future[DataFrame]] =
-      if (s.conf.getOption(EvalGramPrefetchConf).contains("off")) None
-      else Some(Future(graft.Hygiene.labeled(s, "fold: eval grams") {
-        graft.Hygiene.eagerCut(
-          CorpusPipeline.evalGramsOf(evalDocs, cfg)) })(foldEc))
+    val evalGramsF = jobs.fork("fold: eval grams") {
+      graft.Hygiene.eagerCut(CorpusPipeline.evalGramsOf(evalDocs, cfg)) }
     // steps 1–2's PLAN construction, hoisted above the head futures (no
     // job runs here — lazy frames): the ledger hit probe derives its
     // broadcast side from `withDigest`, and prefetching it needs the
@@ -398,69 +414,39 @@ object CorpusPipelineDelta {
     // reads only the PRE-append ledger and the delta — both stable
     // under the held fold lease, and this fold's digest append launches
     // strictly after `exactNew` is cut from the probe's result, so the
-    // early materialization can never see (or race) the append. Ran
-    // unlabeled on the critical path between the head reads and the
-    // gate cut (~0.4 s, 4 jobs in the ProfJobs trace); now rides the
-    // pool beside the precondition aggregates. Conf seam for
-    // same-session A/Bs (the eval-gram precedent).
-    def hitProbe(): DataFrame =
-      s.read.parquet(Compaction.resolveLive(fs, dPath))
-        .join(broadcast(withDigest.select(col("__digest")).distinct()),
-          "__digest")
-        .select(col("__digest")).distinct()
-        .localCheckpoint(eager = true)
-    val hitsF: Option[scala.concurrent.Future[DataFrame]] =
-      if (s.conf.getOption(HitsPrefetchConf).contains("off") ||
-          !Compaction.liveExists(fs, dPath)) None
-      else Some(Future(graft.Hygiene.labeled(s, "fold: ledger hit probe") {
-        hitProbe() })(foldEc))
-    // media head prefetches (r17 session 2, the r16 "Not yet
-    // optimized" #1 rung): the fingerprint cut and the Hamming-store
-    // meta depend only on the media frame / the pre-mutation store —
-    // read-only under the fold lease — so they run beside the head
-    // jobs instead of serializing at the front of the media side job.
-    val mediaOverlapOn =
-      !s.conf.getOption(MediaOverlapConf).contains("off")
-    val mediaFpsF: Option[scala.concurrent.Future[DataFrame]] =
-      if (!mediaOverlapOn) None
-      else media.map(m => Future(
-        graft.Hygiene.labeled(s, "fold: media fingerprints") {
-          graft.Hygiene.eagerCut(Multimodal.imageFingerprints(m).toDF())
-        })(foldEc))
-    val mediaMetaF: Option[scala.concurrent.Future[Option[HammingStoreMeta]]] =
-      if (!mediaOverlapOn) None
-      else media.map(_ => Future(
-        graft.Hygiene.labeled(s, "fold: media store meta") {
-          HammingStore.preloadMeta(s, mediaStoreDir(stateDir)) })(foldEc))
+    // early materialization can never see (or race) the append. None
+    // before the ledger's first append (genesis).
+    val hitsF =
+      if (!Compaction.liveExists(fs, dPath)) None
+      else Some(jobs.fork("fold: ledger hit probe") {
+        s.read.parquet(Compaction.resolveLive(fs, dPath))
+          .join(broadcast(withDigest.select(col("__digest")).distinct()),
+            "__digest")
+          .select(col("__digest")).distinct()
+          .localCheckpoint(eager = true) })
+    // media head prefetches (r17 session 2): the fingerprint cut and
+    // the Hamming-store meta depend only on the media frame / the
+    // pre-mutation store — read-only under the fold lease — so they run
+    // beside the head jobs instead of serializing at the front of the
+    // media side job.
+    val mediaHead = media.map(m => (m,
+      jobs.fork("fold: media fingerprints") {
+        graft.Hygiene.eagerCut(Multimodal.imageFingerprints(m).toDF()) },
+      jobs.fork("fold: media store meta") {
+        HammingStore.preloadMeta(s, mediaStoreDir(stateDir)) }))
     // gate + within-delta dedup cut launched at the head too (r17
-    // session 2, second rung): `within` depends only on the delta —
-    // never on the ledger — so its materialization overlaps the bounds
-    // aggregate, the head reads and the hit probe. The cross-increment
-    // anti-join against the (checkpointed) hit set then stays LAZY at
-    // the exactNew seam below: each consumer evaluates a block-cached
-    // broadcast anti-join over the two checkpoints, the same cost
-    // class the probe-fold retention trade rides (r17 session 1),
-    // instead of the fold paying one more serial materializing job.
-    // Read-only (the checkpoint lands in Spark block storage); a
-    // precondition throw below abandons it harmlessly, the eval-gram
-    // precedent. Conf seam for same-session A/Bs.
+    // session 2): `within` depends only on the delta — never on the
+    // ledger — so its materialization overlaps the bounds aggregate,
+    // the head reads and the hit probe. The cross-increment anti-join
+    // against the (checkpointed) hit set then stays LAZY at the
+    // exactNew step below. Read-only (the checkpoint lands in Spark
+    // block storage).
     val keep = withDigest.groupBy(col("__digest"))
       .agg(min(col(cfg.idCol)).as(cfg.idCol))
     val within = withDigest.join(keep, Seq("__digest", cfg.idCol))
-    val cutPrefetchOn =
-      !s.conf.getOption(CutPrefetchConf).contains("off")
-    val withinCutF: Option[scala.concurrent.Future[DataFrame]] =
-      if (!cutPrefetchOn) None
-      else Some(Future(
-        graft.Hygiene.labeled(s, "fold: gate+exact-dedup cut") {
-          graft.Hygiene.eagerCut(within) })(foldEc))
+    val withinCutF = jobs.fork("fold: gate+exact-dedup cut") {
+      graft.Hygiene.eagerCut(within) }
     val fp = cfgFingerprint(cfg)
-    // migration (r13 review finding): fingerprints persisted before the
-    // keepLangs sort rendered the build-time Seq order verbatim — the
-    // STORED fp is canonicalized before comparing, so a pre-r13 state
-    // keeps folding (under ANY offered order of the same set), and this
-    // fold's meta write re-persists the sorted form, completing the
-    // upgrade
     // 0b. id-ordering precondition runs FIRST (it is the main thread's
     // own job); the meta future is awaited right after, so every check
     // below still throws before the fold's first mutation
@@ -468,8 +454,8 @@ object CorpusPipelineDelta {
       delta.agg(min(col(cfg.idCol).cast("long")).as("lo"),
         max(col(cfg.idCol).cast("long")).as("hi"),
         count(col(cfg.idCol)).as("n")).collect().head }
-    val meta0 = Await.result(metaF, Duration.Inf)
-    meta0.cfgFp.filter(f => canonicalizeFp(f) != fp).foreach(old =>
+    val meta0 = await(metaF)
+    meta0.cfgFp.filter(_ != fp).foreach(old =>
       throw new IllegalArgumentException(
         s"this state was built under a different Config.\n  stored:  " +
           s"$old\n  offered: $fp\nThe chain's batch-equality contract " +
@@ -501,7 +487,7 @@ object CorpusPipelineDelta {
     // [[graft.multimodal.Multimodal.imageDedupDelta]] contract. Checked
     // BEFORE the journal, like the text check: the fold must refuse
     // before its first mutation.
-    val mediaBounds = Await.result(mediaBoundsF, Duration.Inf)
+    val mediaBounds = await(mediaBoundsF)
     val prevMediaMax = meta0.mediaMaxId
     mediaBounds.filterNot(_.isNullAt(0)).foreach(b =>
       prevMediaMax.filter(_ >= b.getLong(0)).foreach(m =>
@@ -517,17 +503,15 @@ object CorpusPipelineDelta {
 
     // ---- JOURNAL (overlapped — optimization r17, guide §2.6): the
     // snapshot depends only on the token and the PRE-mutation
-    // filesystem state, and the gate+exact-dedup cut below mutates
-    // nothing durable (its checkpoint lands in Spark block storage), so
-    // the journal's driver-side tree walk runs on the pool beside that
-    // job. It is awaited — failure propagated — before the fold's first
-    // state mutation (the digest-append launch); the catch path joins
-    // it too, so recovery never races a half-written snapshot.
+    // filesystem state, and the exactNew step below mutates nothing
+    // durable, so the journal's driver-side tree walk runs on the pool.
+    // It is awaited — failure propagated — before the fold's first
+    // state mutation (the digest-append launch).
     val token = batchTag.map(b => s"batch_$b").getOrElse(
       if (bounds.isNullAt(0)) "empty-increment"
       else s"ids_${bounds.getLong(0)}_${bounds.getLong(1)}")
-    val journalF = Future(graft.Hygiene.labeled(s, "fold: journal write") {
-      writeJournal(s, stateDir, token) })(foldEc)
+    val journalF = jobs.fork("fold: journal write") {
+      writeJournal(s, stateDir, token) }
 
     // 2. exact dedup: within-delta min-id per digest (the q35 rule),
     // then cross-increment anti-join against the digest ledger. The
@@ -539,44 +523,19 @@ object CorpusPipelineDelta {
     // per digest, so digests(within) == digests(withDigest), and the
     // hit-probe job skips the min-id groupBy+join it used to evaluate
     // just to reach the same digest set.
-    // (keep/within are plan-built at the head — see withinCutF there.)
     // Consumed by four stages (store ops, retention, decon, digest
-    // append). On-seam: `within` was CUT from the head and the ledger
-    // anti-join stays LAZY over the two checkpoints — each consumer
-    // evaluates a block-cached broadcast anti-join (the probe-fold
-    // retention cost class) instead of the fold paying one more serial
-    // materializing job. The hit set is materialized unconditionally
-    // either way (NOT via the audit-switchable eagerCut): step 7
-    // APPENDS to the ledger that scan reads, and no consumer's plan
-    // may still reference the path. Off-seam: the old single fused
-    // materialization.
-    val exactNew =
-      try graft.Hygiene.labeled(s, "fold: gate+exact-dedup cut") {
-        def hits0() = hitsF.map(f => Await.result(f, Duration.Inf))
-          .getOrElse(graft.Hygiene.labeled(s, "fold: ledger hit probe") {
-            hitProbe() })
-        withinCutF match {
-          case Some(f) =>
-            val withinCut = Await.result(f, Duration.Inf)
-            if (!Compaction.liveExists(fs, dPath)) withinCut
-            else withinCut.join(broadcast(hits0()),
-              Seq("__digest"), "left_anti")
-          case None =>
-            graft.Hygiene.eagerCut(
-              if (!Compaction.liveExists(fs, dPath)) within
-              else within.join(broadcast(hits0()),
-                Seq("__digest"), "left_anti"))
-        }
-      } catch { case t: Throwable =>
-        // a failed cut must still join the in-flight journal write
-        // before propagating — the caller may recover immediately, and
-        // recovery must never race a still-writing snapshot
-        try Await.result(journalF, Duration.Inf)
-        catch { case _: Throwable => () }
-        throw t
-      }
+    // append). `within` was CUT at the head and the ledger anti-join
+    // stays LAZY over the two checkpoints — each consumer evaluates a
+    // block-cached broadcast anti-join (the probe-fold retention cost
+    // class) instead of the fold paying one more serial materializing
+    // job. The hit set is materialized unconditionally (NOT via the
+    // audit-switchable eagerCut): step 7 APPENDS to the ledger that
+    // scan reads, and no consumer's plan may still reference the path.
+    val withinCut = await(withinCutF)
+    val exactNew = hitsF.fold(withinCut)(f =>
+      withinCut.join(broadcast(await(f)), Seq("__digest"), "left_anti"))
     // every mutation below requires the journal durable first
-    Await.result(journalF, Duration.Inf)
+    await(journalF)
 
     // ---- OVERLAP (optimization r16, guide §2.6): everything between
     // the journal and the commit marker is rollback-covered file
@@ -584,32 +543,12 @@ object CorpusPipelineDelta {
     // the digest-ledger append, the media half, the store append, the
     // meta staging — run on [[foldPool]] while the main thread walks
     // the dependent chain (store probe → retention → decon → mix).
-    // Every side job is awaited BEFORE the pre-commit crash seam, so
-    // the commit point sees exactly the same durable state as the
-    // sequential form; a failure anywhere (including an injected crash
-    // seam riding a side job) first joins every in-flight side job —
-    // recovery then rolls back a stable, not still-mutating, state.
-    val pending = scala.collection.mutable.ListBuffer
-      .empty[(String, scala.concurrent.Future[Unit])]
-    def bg(label: String)(body: => Unit): Unit =
-      pending += label -> scala.concurrent.Future(
-        graft.Hygiene.labeled(s, label)(body))(foldEc)
-    def awaitPending(): Unit = {
-      val results = pending.toList.map { case (_, f) =>
-        scala.concurrent.Await.ready(f,
-          scala.concurrent.duration.Duration.Inf).value.get
-      }
-      pending.clear()
-      results.collectFirst { case scala.util.Failure(t) => throw t }
-        .foreach(_ => ())
-    }
-    try {
 
     // 6→(overlapped): digest-ledger append (delta-sized) — BEFORE the
     // commit point like every state append; nothing in this fold reads
     // the ledger after `exactNew` was cut, so it rides the pool from
     // the moment the journal exists
-    bg("fold: digest append") {
+    jobs.fork("fold: digest append") {
       exactNew.select(col("__digest")).distinct()
         .write.mode("append").parquet(Compaction.resolveLive(fs, dPath))
     }
@@ -618,7 +557,7 @@ object CorpusPipelineDelta {
     // (optimization r17): it depends only on the durable journal and
     // the media frame, never on the text chain, and it is the longest
     // side chain — starting it before the text store work means the
-    // pre-commit await no longer tails on it.
+    // pre-commit join no longer tails on it.
     // (round 16 — the last uncomposed capstone): dedup
     // the increment's attached images through the persisted
     // [[HammingStore]], under THIS fold's journal — the E18 per-batch
@@ -634,104 +573,62 @@ object CorpusPipelineDelta {
     // append the pair log → ledger EVERY media id (fp NULL for
     // fingerprint-less rows: they are retained by definition, and the
     // ledger is what [[retainedMediaIds]] replays retention over).
-    media.foreach { m => bg("fold: media dedup") {
+    mediaHead.foreach { case (m, fpsF, mediaMetaF) =>
+      jobs.fork("fold: media dedup") {
       val msd = mediaStoreDir(stateDir)
-      // fingerprints prefetched beside the fold's head jobs (r17
-      // session 2); off-seam they cut here, the old sequential shape
-      val fps = mediaFpsF.map(f => Await.result(f, Duration.Inf))
-        .getOrElse(graft.Hygiene.eagerCut(
-          Multimodal.imageFingerprints(m).toDF()))
+      val fps = await(fpsF)
       // The chain's INTERNAL independent halves overlap on the fold
-      // pool (r17 session 2 — the r16 "Not yet optimized" #1 rung):
-      // the media-id ledger append depends only on `fps` and the
-      // frame; the store build/append has no reader inside this fold;
-      // the pair-log write needs only the materialized pairs. All are
-      // journal-covered appends with no ordering contract between them
-      // (recovery rolls every one back from the file snapshot), and
-      // every inner job is awaited before this side job returns — on
-      // the failure path too — so the fold's commit point and crash
-      // seams see exactly the sequential form's durable state.
-      val inner = scala.collection.mutable.ListBuffer
-        .empty[scala.concurrent.Future[Unit]]
-      def innerBg(label: String)(body: => Unit): Unit =
-        inner += scala.concurrent.Future(
-          graft.Hygiene.labeled(s, label)(body))(foldEc)
-      def awaitInner(): Unit = {
-        val rs = inner.toList.map(f =>
-          Await.ready(f, Duration.Inf).value.get)
-        inner.clear()
-        rs.collectFirst { case scala.util.Failure(t) => throw t }
-          .foreach(_ => ())
-      }
-      try {
-        def ledgerWrite(): Unit =
-          m.toDF().select(col("doc_id"))
-            .join(fps, Seq("doc_id"), "left")
-            .write.mode("append")
-            .parquet(Compaction.resolveLive(fs, mediaSeenDir(stateDir)))
+      // pool (r17 session 2): the media-id ledger append depends only
+      // on `fps` and the frame; the store build/append has no reader
+      // inside this fold; the pair-log write needs only the
+      // materialized pairs. All are journal-covered appends with no
+      // ordering contract between them (recovery rolls every one back
+      // from the file snapshot). Their own group joins them before
+      // this side job returns, so `post-media` fires after every media
+      // append.
+      val inner = new JoinGroup(s)
+      inner.joining {
         // emptiness decided from the step-0c bounds row (null min ⟺
         // zero rows) — an isEmpty here would re-run the ledger join as
         // its own job at the fold's job-count floor
-        val ledgerNeeded = mediaBounds.exists(!_.isNullAt(0))
-        if (mediaOverlapOn && ledgerNeeded)
-          innerBg("fold: media ledger")(ledgerWrite())
-        val mediaMeta0 = mediaMetaF.map(f => Await.result(f, Duration.Inf))
-        val mediaGenesis = mediaMeta0 match {
-          case Some(meta) => meta.isEmpty
-          case None => !HammingStore.exists(s, msd)
-        }
+        if (mediaBounds.exists(!_.isNullAt(0)))
+          inner.fork("fold: media ledger") {
+            m.toDF().select(col("doc_id"))
+              .join(fps, Seq("doc_id"), "left")
+              .write.mode("append")
+              .parquet(Compaction.resolveLive(fs, mediaSeenDir(stateDir)))
+          }
+        val mediaMeta0 = await(mediaMetaF)
         val mPairs =
-          if (mediaGenesis) {
+          if (mediaMeta0.isEmpty) {
             if (fps.isEmpty)
               Seq.empty[(Long, Long, Int)]
                 .toDF("doc_id_a", "doc_id_b", "hamming")
-            else if (mediaOverlapOn) {
+            else {
               // build ⊥ selfJoin: both read the checkpointed fps and
               // the built store has no reader inside this fold
-              innerBg("fold: media store build") {
+              inner.fork("fold: media store build") {
                 HammingStore.build(fps, msd, "doc_id", "fp",
                   mediaMaxDist, bits = 64, cells = storeCells)
               }
               HammingJoin.selfJoin(fps, "doc_id", "fp", mediaMaxDist,
                 bits = 64)
-            } else {
-              val p = HammingJoin.selfJoin(fps, "doc_id", "fp",
-                mediaMaxDist, bits = 64)
-              HammingStore.build(fps, msd, "doc_id", "fp", mediaMaxDist,
-                bits = 64, cells = storeCells)
-              p
             }
-          } else if (mediaOverlapOn) {
+          } else {
             // fused probe+append with the append half on the pool —
             // the pairs return as soon as they are materialized; the
-            // append joins `inner` and completes before this side job
-            // returns (HammingStore mirrors the signature store's
-            // overlapped form; the store meta was prefetched at the
-            // fold's head)
+            // append joins `inner` (HammingStore mirrors the signature
+            // store's overlapped form; the store meta was prefetched at
+            // the fold's head)
             val (p, appendDone) = HammingStore.probeThenAppendOverlapped(
-              s, msd, fps, new java.util.concurrent.Executor {
-                def execute(r: Runnable): Unit = foldPool.execute(
-                  new Runnable {
-                    def run(): Unit = graft.Hygiene.labeled(
-                      s, "fold: media store")(r.run())
-                  })
-              }, preloadedMeta = mediaMeta0.flatten)
-            inner += appendDone
+              s, msd, fps, inner.executor("fold: media store"),
+              preloadedMeta = mediaMeta0)
+            inner.track(appendDone)
             p
-          } else HammingStore.probeThenAppend(s, msd, fps)
+          }
         if (!mPairs.isEmpty)
           mPairs.write.mode("append")
             .parquet(Compaction.resolveLive(fs, mediaPairsDir(stateDir)))
-        if (!mediaOverlapOn && ledgerNeeded)
-          ledgerWrite()
-        awaitInner()
-      } catch {
-        case t: Throwable =>
-          // join the in-flight inner jobs before propagating — the
-          // fold's recovery must see a stable partial state (their own
-          // failures are secondary to the primary error)
-          try awaitInner() catch { case _: Throwable => () }
-          throw t
       }
       maybeCrash(s, "post-media")
     } } // the dirtiest recovery window
@@ -751,7 +648,7 @@ object CorpusPipelineDelta {
     // banding, probe == inline spec'd on the store.
     val withToks = exactNew.select(col(cfg.idCol).as("doc_id"),
       array_distinct(col("__toks")).as("toks"))
-    val storeMeta0 = Await.result(storeMetaF, Duration.Inf)
+    val storeMeta0 = await(storeMetaF)
     val genesis = storeMeta0.isEmpty
     val pairs = graft.Hygiene.labeled(s, "fold: neardup store") {
       if (genesis) {
@@ -762,7 +659,7 @@ object CorpusPipelineDelta {
             cfg.nearDupThreshold, sorted = false)
           // the built store has no reader inside this fold (the probe
           // path is next increment's) — overlap it with retention/decon
-          bg("fold: neardup store build") {
+          jobs.fork("fold: neardup store build") {
             NearDupSignatureStore.build(withToks, stPath,
               cfg.nearDupThreshold, storeCells)
           }
@@ -771,21 +668,16 @@ object CorpusPipelineDelta {
       } else {
         // fused probe+append with the APPEND half overlapped: the
         // pairs return as soon as they are materialized; the append's
-        // writes join `pending` and complete before the commit point.
+        // writes join `jobs` and complete before the commit point.
         // sorted = false (r17): retention consumes the pairs as a SET,
         // so the probe's contract orderBy would be a wasted
         // exchange+sort inside its materializing job; the store meta
         // was prefetched beside the fold's head jobs.
         val (p, appendDone) = NearDupSignatureStore
           .probeThenAppendOverlapped(s, stPath, withToks,
-            new java.util.concurrent.Executor {
-              def execute(r: Runnable): Unit = foldPool.execute(
-                new Runnable {
-                  def run(): Unit =
-                    graft.Hygiene.labeled(s, "fold: neardup store")(r.run())
-                })
-            }, sorted = false, preloadedMeta = storeMeta0)
-        pending += "fold: neardup store append" -> appendDone
+            jobs.executor("fold: neardup store"), sorted = false,
+            preloadedMeta = storeMeta0)
+        jobs.track(appendDone)
         p
       } }
     maybeCrash(s, "post-store")
@@ -811,12 +703,11 @@ object CorpusPipelineDelta {
     // 5. external decon — per-doc decision against the fixed benchmark
     // (gram table prefetched at the fold's head; see evalGramsF)
     val deconDelta = CorpusPipeline.externalDecon(retainedDelta,
-      "__toks", evalDocs, cfg,
-      evalGramsPre = evalGramsF.map(f => Await.result(f, Duration.Inf)))
+      "__toks", evalDocs, cfg, evalGramsPre = Some(await(evalGramsF)))
 
     // (step 6, the digest-ledger append, was launched onto the pool
     // right after the journal — see the OVERLAP note above; it is
-    // awaited with every other side job before the commit point, so
+    // joined with every other side job before the commit point, so
     // the ledger is never half-an-increment ahead of the mix/meta the
     // commit protocol below swaps in)
 
@@ -842,7 +733,7 @@ object CorpusPipelineDelta {
       .filterNot(_.isNullAt(1))
       .map(b => math.max(b.getLong(1), prevMediaMax.getOrElse(Long.MinValue)))
       .orElse(prevMediaMax)
-    bg("fold: meta stage") {
+    jobs.fork("fold: meta stage") {
       val metaNext = s"${metaDir(stateDir)}__next"
       fs.delete(new Path(metaNext), true)
       Seq((newMax, batchTag.orElse(meta0.lastBatch), fp, bLo, bHi, bN,
@@ -886,10 +777,9 @@ object CorpusPipelineDelta {
     } // scoped parts
     } // fold: mix stage
 
-    // every pool-side job must be durable before the commit decision —
-    // the pre-commit state a crash here leaves is then exactly the
-    // sequential form's
-    awaitPending()
+    // the [[foldPool]] invariant: every pool job is joined (durable, or
+    // its failure thrown) before the commit decision
+    jobs.joinAll()
     maybeCrash(s, "pre-commit")
     // ---- COMMIT: the marker flips recovery from roll-back to
     // roll-forward; everything after it is idempotent-completable ----
@@ -909,14 +799,7 @@ object CorpusPipelineDelta {
     maybeCrash(s, "mid-retire")
     fs.delete(new Path(commitMark(stateDir)), false)
     fs.delete(new Path(metaCopy(stateDir)), true)
-    } catch {
-      case t: Throwable =>
-        // join every in-flight side job before propagating — recovery
-        // must see a stable, not still-mutating, partial state (their
-        // own failures are secondary to the primary error)
-        try awaitPending() catch { case _: Throwable => () }
-        throw t
-    }
+    } // jobs.joining
     } // fold lease
   }
 
@@ -987,28 +870,6 @@ object CorpusPipelineDelta {
     * and `stateDir/store`), then [[recoverFold]]. */
   private[graft] val CrashPointConf = "spark.graft.delta.crashpoint"
 
-  /** Conf: "off" disables the fold's eval-gram prefetch (r17) — the
-    * measurement/diagnostic seam for same-session A/Bs; any other
-    * value (or absence) keeps the prefetch on. */
-  private[graft] val EvalGramPrefetchConf =
-    "spark.graft.delta.evalGramPrefetch"
-
-  /** Conf: "off" runs the digest-ledger hit probe inline at its old
-    * position instead of prefetching it beside the fold's head jobs
-    * (r17 session 2) — same-session A/B seam. */
-  private[graft] val HitsPrefetchConf = "spark.graft.delta.hitsPrefetch"
-
-  /** Conf: "off" runs the media side job's internal chain in its old
-    * strictly sequential shape (fingerprint → meta read → probe+append
-    * → pair log → ledger on one thread) instead of overlapping its
-    * independent halves (r17 session 2) — same-session A/B seam. */
-  private[graft] val MediaOverlapConf = "spark.graft.delta.mediaOverlap"
-
-  /** Conf: "off" materializes the gate+exact-dedup cut inline at its
-    * old position (one fused job, ledger anti-join included) instead
-    * of cutting `within` from the fold's head and leaving the
-    * anti-join lazy (r17 session 2) — same-session A/B seam. */
-  private[graft] val CutPrefetchConf = "spark.graft.delta.cutPrefetch"
   private[graft] final class InjectedCrash(point: String)
       extends RuntimeException(s"injected crash at $point")
   private def maybeCrash(s: SparkSession, point: String): Unit =

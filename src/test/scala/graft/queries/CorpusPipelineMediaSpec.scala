@@ -208,4 +208,62 @@ class CorpusPipelineMediaSpec extends AnyFunSuite with BeforeAndAfterAll {
       rows(CorpusPipeline.assemble(corpus, cfg)),
       "mixed media/media-less chain diverged from the text batch twin")
   }
+
+  test("a fold refused by the id-ordering precondition joins every " +
+      "fold job it started before the refusal propagates") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    val state = tmp("cpm_refused")
+    val maxId = corpus.agg(max($"doc_id")).collect().head.getLong(0)
+    val inc1 = corpus.filter($"doc_id" <= maxId / 2)
+    val ms = mediaBatches
+    CorpusPipelineDelta.foldIncrement(inc1, state, cfg,
+      media = Some(mediaDs(ms(0))), mediaMaxDist = maxDist)
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusBridge.drain(sc)
+    // (label, event, time) of every `fold:`-labelled job start and end
+    val labels = new java.util.concurrent.ConcurrentHashMap[Int, String]
+    val events =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Long)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("fold:")).foreach { l =>
+            labels.put(e.jobId, l)
+            events.add((l, "start", e.time))
+          }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(labels.get(e.jobId)).foreach(l => events.add((l, "end", e.time)))
+    }
+    sc.addSparkListener(listener)
+    val caught =
+      try {
+        // the same text increment again: its ids are not above the
+        // state's max, so the fold refuses after its head jobs started.
+        // A slowed text column keeps the text-reading head jobs running
+        // past the refusal; the id-bounds check never reads the text.
+        val slowText = udf { (t: String) => Thread.sleep(10); t }
+        val ex = intercept[IllegalArgumentException] {
+          CorpusPipelineDelta.foldIncrement(
+            inc1.withColumn("text", slowText(col("text"))), state, cfg,
+            media = Some(mediaDs(ms(1))), mediaMaxDist = maxDist)
+        }
+        val at = System.currentTimeMillis()
+        assert(ex.getMessage.contains("increment ids must be strictly"),
+          ex.getMessage)
+        // a job left running (or not yet started) would show up here
+        Thread.sleep(2000)
+        at
+      } finally {
+        org.apache.spark.ListenerBusBridge.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    import scala.jdk.CollectionConverters._
+    val recorded = events.asScala.toSeq
+    assert(recorded.exists(_._2 == "end"), "no fold job was recorded")
+    val late = recorded.filter(_._3 > caught)
+    assert(late.isEmpty, s"fold jobs ran after the refusal: $late")
+  }
 }

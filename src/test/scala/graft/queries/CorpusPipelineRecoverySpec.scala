@@ -324,44 +324,6 @@ class CorpusPipelineRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
       rows(CorpusPipeline.assemble(inc1.unionByName(inc2), cfg)))
   }
 
-  test("a stored PRE-SORT fingerprint (keepLangs in Seq order, the r12 " +
-      "rendering) keeps folding under the same config and is upgraded " +
-      "to the sorted form by that fold — canonicalization must not " +
-      "refuse every pre-existing state (r13 review)") {
-    val state = tmp("rec_fp_legacy")
-    CorpusPipelineDelta.foldIncrement(inc1, state, cfg)
-    val legacyFp = CorpusPipelineDelta.cfgFingerprintLegacy(cfg)
-    val sortedFp = CorpusPipelineDelta.cfgFingerprint(cfg)
-    assert(legacyFp != sortedFp,
-      "fixture: default keepLangs must be unsorted for this test to bite")
-    // rewrite the persisted meta with the r12-era rendering
-    import spark.implicits._
-    import org.apache.spark.sql.functions.lit
-    val metaRow = spark.read.parquet(s"$state/meta")
-      .withColumn("cfg_fp", lit(legacyFp)).collect()
-    val metaDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(metaRow.toIndexedSeq, 1),
-      spark.read.parquet(s"$state/meta").schema)
-    fs.delete(new Path(s"$state/meta"), true)
-    metaDf.coalesce(1).write.parquet(s"$state/meta")
-    // the next fold must be accepted, not refused — offered here with
-    // yet ANOTHER keepLangs order (the stored-side canonicalization
-    // must not depend on the offer matching the build-time Seq order)
-    CorpusPipelineDelta.foldIncrement(inc2, state,
-      cfg.copy(keepLangs = cfg.keepLangs.reverse))
-    val stored = spark.read.parquet(s"$state/meta")
-      .select("cfg_fp").collect().head.getString(0)
-    assert(stored == sortedFp, "fold did not upgrade the stored " +
-      s"fingerprint: $stored")
-    assert(rows(CorpusPipelineDelta.refreshOutput(spark, state, cfg)) ==
-      rows(CorpusPipeline.assemble(inc1.unionByName(inc2), cfg)))
-    // a REAL config change is still refused through the legacy path
-    val e = intercept[IllegalArgumentException](
-      CorpusPipelineDelta.foldIncrement(inc3, state,
-        cfg.copy(minQuality = 9000L)))
-    assert(e.getMessage.contains("different Config"), e.getMessage)
-  }
-
   test("keepLangs entries carrying a fingerprint delimiter (',' or '|') " +
       "are rejected loudly — two configs must never render one cfg_fp, " +
       "and a fold with such a config dies before touching state (r13 " +
